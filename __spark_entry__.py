@@ -116,8 +116,15 @@ def _duck_round5(col):
     1,365 rows of -0.0 vs +0.0 at sf0.01). Verified bit-identical to
     DuckDB over 600k samples including exact half-boundaries."""
     c = F.col(col) if isinstance(col, str) else col
-    y = c * F.lit(100000.0)
-    mag = F.floor(F.abs(y) + F.lit(0.5)).cast("double") / F.lit(100000.0)
+    y = F.abs(c * F.lit(100000.0))
+    # carry correction: |y| + 0.5 can round UP to the next integer
+    # (|y| = 0.49999999999999994 gives 1.0), so floor overshoots by
+    # one exactly when m0 - 0.5 > |y|. Compare in that form: m0 - 0.5
+    # is exact, while m0 - |y| rounds to 0.5 at that very input and
+    # would miss the carry
+    m0 = F.floor(y + F.lit(0.5)).cast("double")
+    m = F.when(m0 - F.lit(0.5) > y, m0 - F.lit(1.0)).otherwise(m0)
+    mag = m / F.lit(100000.0)
     # sign test must see the sign BIT, not the comparison sign: an input
     # of exactly -0.0 fails `c < 0`, but its string form keeps the minus
     # (ANSI mode forbids the 1.0/x -> -Infinity probe)

@@ -55,22 +55,34 @@ def anomaly_zscore(tier_df: DataFrame, window: int = 24,
     tests/test_anomaly.py's window-sum-vs-explicit-fold bit-equality
     case, so a Spark version that changed frame evaluation order would
     fail OUR tests, not the driver gate.
+
+    Each frame aggregate (count, sum, sum of squares) is evaluated
+    ONCE: the three are selected as named columns, and mean / var /
+    std / z / flag are derived from those columns in a second
+    projection. A windowed Column reused by name in later arithmetic
+    is an expression tree, so every use is planned again as its own
+    window function and Catalyst does not merge the copies — the
+    inline form planned 131 window functions for these 3 and was the
+    costliest product of the batch pass. The arithmetic and its order
+    are unchanged, so results are bit-identical to the inline form.
+    tests/test_plan_window_once.py guards the plan shape.
     """
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
     if min_obs < 2:
         raise ValueError(f"min_obs must be >= 2, got {min_obs}")
-    t = tier_df.where(F.col(value_col).isNotNull())
     w = (Window.partitionBy("url").orderBy(ts_col)
          .rowsBetween(-window, -1))
-    x0 = F.col(value_col)
-    n = F.count(x0).over(w)
-    s = F.sum(x0).over(w)
-    ss = F.sum(x0 * x0).over(w)
+    x = F.col(value_col)
+    t = (tier_df.where(x.isNotNull())
+         .select("url", ts_col, x.alias(value_col),
+                 F.count(x).over(w).alias("_n"),
+                 F.sum(x).over(w).alias("_s"),
+                 F.sum(x * x).over(w).alias("_ss")))
+    n, s, ss = F.col("_n"), F.col("_s"), F.col("_ss")
     mean = F.when(n > 0, s / n)
     var = F.when(n > 1, (ss - n * mean * mean) / (n - 1))
     std = F.when(var > 0, F.sqrt(var))
-    x = F.col(value_col)
     z = F.when(std.isNotNull(), (x - mean) / std)
     flag = F.when(z.isNotNull() & (n >= min_obs)
                   & (F.abs(z) > F.lit(float(nsig))), F.lit(True)) \
@@ -330,17 +342,19 @@ def slo_burn_rate(tier_df: DataFrame, threshold: float,
     base = Window.partitionBy("url").orderBy(ts_col)
     ws = base.rowsBetween(-(short_window - 1), 0)
     wl = base.rowsBetween(-(long_window - 1), 0)
-    short_rate = (F.sum("violation").over(ws).cast("double")
-                  / F.count(F.lit(1)).over(ws))
-    long_rate = (F.sum("violation").over(wl).cast("double")
-                 / F.count(F.lit(1)).over(wl))
+    # each rate selected once, then gated by name: reusing the
+    # windowed Columns in is_burning would plan every window twice
+    t = t.select("url", ts_col, F.col(value_col), "violation",
+                 (F.sum("violation").over(ws).cast("double")
+                  / F.count(F.lit(1)).over(ws)).alias("short_rate"),
+                 (F.sum("violation").over(wl).cast("double")
+                  / F.count(F.lit(1)).over(wl)).alias("long_rate"))
     bt = F.lit(float(burn_threshold))
     return (t.select("url", ts_col, F.col(value_col),
                      F.col("violation").cast("boolean")
                      .alias("violation"),
-                     short_rate.alias("short_rate"),
-                     long_rate.alias("long_rate"),
-                     ((short_rate > bt) & (long_rate > bt))
+                     "short_rate", "long_rate",
+                     ((F.col("short_rate") > bt) & (F.col("long_rate") > bt))
                      .alias("is_burning")))
 
 

@@ -63,7 +63,10 @@ def orbital_detrend(series: DataFrame, cfg: EngineConfig = DEFAULT,
     `offset` re-levelling, orbital.py:284-291), degree 1 = linear ramp.
 
     Pure column algebra: closed-form OLS via per-key moment aggregates
-    (one shuffle), no UDF.
+    (one shuffle), no UDF. Each moment is selected once as a named
+    column and the fit is derived from the columns — reusing a
+    windowed Column in the fit arithmetic would plan one window
+    function per use (15 for these 5).
     """
     w = Window.partitionBy("url")
     t = ((F.unix_timestamp("warc_ts")
@@ -74,18 +77,21 @@ def orbital_detrend(series: DataFrame, cfg: EngineConfig = DEFAULT,
         med = F.expr("median(value)").over(w)
         return (df.withColumn("value", F.col("value") - med)
                 .drop("_t"))
-    n = F.count("value").over(w)
-    tm = F.avg(F.when(F.col("value").isNotNull(), F.col("_t"))).over(w)
-    ym = F.avg("value").over(w)
-    sxy = F.avg(F.when(F.col("value").isNotNull(),
-                       F.col("_t") * F.col("value"))).over(w)
-    sxx = F.avg(F.when(F.col("value").isNotNull(),
-                       F.col("_t") * F.col("_t"))).over(w)
+    has = F.col("value").isNotNull()
+    moments = {
+        "_tm": F.avg(F.when(has, F.col("_t"))),
+        "_ym": F.avg("value"),
+        "_sxy": F.avg(F.when(has, F.col("_t") * F.col("value"))),
+        "_sxx": F.avg(F.when(has, F.col("_t") * F.col("_t"))),
+    }
+    df = df.select("*", *[m.over(w).alias(k) for k, m in moments.items()])
+    tm, ym, sxy, sxx = (F.col(k) for k in moments)
     slope = (sxy - tm * ym) / (sxx - tm * tm)
     icept = ym - slope * tm
     return (df.withColumn(
         "value",
-        F.col("value") - (icept + slope * F.col("_t"))).drop("_t"))
+        F.col("value") - (icept + slope * F.col("_t")))
+        .drop("_t", *moments))
 
 
 def aps_temporal_filter(series: DataFrame,

@@ -36,7 +36,7 @@ from __future__ import annotations
 import os
 from typing import Optional
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from pyrate_spark.config import EngineConfig, DEFAULT
 from pyrate_spark.operators.udf_kernels import (make_linear_rate_fn,
@@ -70,7 +70,21 @@ def detect_hot_keys(df: DataFrame, key: str = "url",
     mean = stats["mean"] or 1.0
     rows = (counts.where(F.col("count") > F.lit(hot_factor * mean))
             .select(key).collect())       # tiny by construction
-    return tuple(sorted(r[0] for r in rows))
+    # a null key is a key: it sorts first, so it can sit beside strings
+    return tuple(sorted((r[0] for r in rows),
+                        key=lambda k: (k is not None, k)))
+
+
+def _is_hot(key: str, hot_keys: tuple) -> Column:
+    """Null-safe hot-set membership: TRUE for a hot key (a null hot key
+    included), FALSE for every other key — never NULL, so the cold side
+    ``~_is_hot`` keeps a null key. ``isin`` alone is NULL for a null
+    key, which dropped the null group from both sides of the split."""
+    named = [k for k in hot_keys if k is not None]
+    hot = F.coalesce(F.col(key).isin(named), F.lit(False))
+    if len(named) < len(hot_keys):
+        hot = hot | F.col(key).isNull()
+    return hot
 
 
 def salted_buckets(df: DataFrame, key: str = "url",
@@ -221,10 +235,9 @@ def keyed_apply(df: DataFrame, key: str, n_buckets: int, fn, schema,
 
         if not hot_keys:
             return df.mapInPandas(mfn, schema)
-        hot_list = [k for k in hot_keys]
-        cold = df.where(~F.col(key).isin(hot_list))
-        hot = _spread_hot(df.where(F.col(key).isin(hot_list)), key,
-                          len(hot_list))
+        is_hot = _is_hot(key, hot_keys)
+        cold = df.where(~is_hot)
+        hot = _spread_hot(df.where(is_hot), key, len(hot_keys))
         return (cold.mapInPandas(mfn, schema)
                 .unionByName(hot.groupBy(key).applyInPandas(fn, schema)))
     return (_bucketed(df, key, n_buckets, detect_hot=detect_hot,
@@ -404,7 +417,7 @@ def linear_rate_from_pairs(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
             use_mst, vcm, float(cfg.velerror_nsig), has_w, has_mv)
         cold = src
         if hot_keys:
-            cold = src.where(~F.col("url").isin(list(hot_keys)))
+            cold = src.where(~_is_hot("url", hot_keys))
         out_cold = (cold
                     .groupBy("url")
                     .agg(F.sort_array(F.collect_list(
@@ -412,7 +425,7 @@ def linear_rate_from_pairs(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
                     .mapInArrow(afn, LR_SCHEMA))
         if not hot_keys:
             return out_cold
-        hot = _spread_hot(src.where(F.col("url").isin(list(hot_keys))),
+        hot = _spread_hot(src.where(_is_hot("url", hot_keys)),
                           "url", len(hot_keys))
         return out_cold.unionByName(
             hot.groupBy("url").applyInPandas(fn, LR_SCHEMA))

@@ -244,8 +244,12 @@ def rate_grid(per_key: DataFrame, key_col: str = "url",
     off_df = spark.createDataFrame(offsets, "_pid int, _offset long")
     local_rn = F.row_number().over(
         Window.partitionBy("_pid").orderBy(key_col)) - 1
-    rn = F.col("_offset") + local_rn
+    # the rank is selected once: y and x both read it, and a reused
+    # windowed Column would be planned once per use
+    rn = F.col("_rn")
     return (ranged.join(F.broadcast(off_df), "_pid")
+            .select(key_col, value_col,
+                    (F.col("_offset") + local_rn).alias("_rn"))
             .select(F.col(key_col),
                     (rn / width).cast("int").alias("y"),
                     F.pmod(rn, F.lit(width)).cast("int").alias("x"),

@@ -493,19 +493,22 @@ def counter_rate(tier_df: DataFrame, value_col: str = "value_avg",
     from pyspark.sql import Window
     from pyrate_spark.operators.asof import _as_seconds
     w = Window.partitionBy("url").orderBy(ts_col)
-    v = F.col(value_col)
-    prev = F.lag(value_col).over(w)
-    prev_ts = F.lag(ts_col).over(w)
+    # each lag selected once: a windowed Column reused in the delta/dt
+    # arithmetic would be planned once per use
+    t = tier_df.select("*", F.lag(value_col).over(w).alias("_prev"),
+                       F.lag(ts_col).over(w).alias("_prev_ts"))
+    v, prev, prev_ts = F.col(value_col), F.col("_prev"), F.col("_prev_ts")
     delta = (F.when(prev.isNull() | v.isNull(), None)
              .when(v < prev, v)              # reset: counter restarted
              .otherwise(v - prev))
     ts_type = tier_df.schema[ts_col].dataType
     dt = (_as_seconds(F.col(ts_col), ts_type, f"ts_col {ts_col!r}")
           - _as_seconds(prev_ts, ts_type, f"ts_col {ts_col!r}"))
-    return (tier_df
+    return (t
             .withColumn("delta", delta)
             .withColumn("rate_per_sec",
-                        F.when(dt > 0, delta / dt)))
+                        F.when(dt > 0, F.col("delta") / dt))
+            .drop("_prev", "_prev_ts"))
 
 
 def ewma_tier(tier_df: DataFrame, alpha: float = 0.5,

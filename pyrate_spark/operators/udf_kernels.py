@@ -32,9 +32,13 @@ from pyrate_spark.kernels.vcm import get_vcmt
 
 def group_slices(pdf: pd.DataFrame, key: str = "url"):
     """(key, row-index array) per key via one argsort — cheaper than
-    pandas groupby for many keys per bucket."""
+    pandas groupby for many keys per bucket. A null key is a key: its
+    rows come first (``None`` does not order against strings)."""
     keys = pdf[key].to_numpy()
-    order = np.argsort(keys, kind="stable")
+    null = pd.isna(keys)
+    named = np.flatnonzero(~null)
+    order = np.concatenate((np.flatnonzero(null),
+                            named[np.argsort(keys[named], kind="stable")]))
     sorted_keys = keys[order]
     boundaries = np.flatnonzero(
         np.concatenate(([True], sorted_keys[1:] != sorted_keys[:-1])))

@@ -97,3 +97,15 @@ def test_pair_source_agnostic(spark):
     got = {r.doc_id: r.cluster_id
            for r in near_dup_clusters(pairs, docs=docs).collect()}
     assert got == {7: 7, 8: 7, 9: 9}
+
+
+def test_fractional_labels_converge(spark):
+    # path 2.55 - 2.6 - 2.7 - 2.8: in round 1 the label of 2.7 moves
+    # 2.6 -> 2.55 and that of 2.8 moves 2.7 -> 2.6, but every label
+    # rounds to 3 in decimal(38,0), so an exact-sum witness over the
+    # cast would stop there and leave 2.8 in the cluster of 2.6
+    pairs = spark.createDataFrame([(2.55, 2.6), (2.6, 2.7), (2.7, 2.8)],
+                                  "doc_a double, doc_b double")
+    got = {r.doc_id: r.cluster_id
+           for r in near_dup_clusters(pairs).collect()}
+    assert got == {2.55: 2.55, 2.6: 2.55, 2.7: 2.55, 2.8: 2.55}

@@ -82,6 +82,10 @@ class TestClosureFoldOrder:
             rng.normal(0, 10, 4000),
             (rng.integers(-10 ** 6, 10 ** 6, 4000) + 0.5) / 1e5,
             np.array([0.0, -0.0, 1e-9, -1e-9, 1.5e-5, -1.5e-5]),
+            # x * 1e5 = 0.49999999999999994: adding 0.5 rounds up to
+            # 1.0, so floor(|y| + 0.5) needs the carry correction;
+            # DuckDB gives 0.0
+            np.array([4.9999999999999994e-06, -4.9999999999999994e-06]),
         ])
         sdf = spark.createDataFrame(pd.DataFrame({"x": xs}))
         got = (sdf.select(entrymod._duck_round5("x").alias("r"))
