@@ -53,8 +53,10 @@ class EngineConfig:
     ifg_drop_thr: float = 0.5      # breach-fraction drop gate 2
 
     # --- execution ---
-    salt_buckets: int = 64      # key-batching buckets for grouped-map UDFs
-    hot_key_salt: int = 8       # extra salt for skewed keys
+    # unread: grouped-map kernels run one frame per url partition
+    # (spark.sql.shuffle.partitions). Kept, with its validation, only
+    # because bench.py and perfbench/workloads.py pass salt_buckets=.
+    salt_buckets: int = 64
     checkpoint_dir: str = ""    # per-partition checkpoint manifests; "" = off
 
     def __post_init__(self):
@@ -101,8 +103,7 @@ _RANGES = (
     ("min_loops_per_ifg", 0, None, None),         # 0 = gate off (engine
                                                   # ext.; reference min 1)
     ("ifg_drop_thr", 0.01, 1.0, None),            # ifg_drop_thr
-    ("salt_buckets", 1, None, None),              # engine knob
-    ("hot_key_salt", 1, None, None),              # engine knob
+    ("salt_buckets", 1, None, None),              # engine knob (unread)
 )
 
 

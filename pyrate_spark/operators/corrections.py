@@ -128,8 +128,8 @@ def maxvar_column(series: DataFrame,
 
 
 def maxvar_full(series: DataFrame, cfg: EngineConfig = DEFAULT,
-                bucket_seconds: int = 86400, calc_alpha: bool = True,
-                n_buckets: int | None = None) -> DataFrame:
+                bucket_seconds: int = 86400,
+                calc_alpha: bool = True) -> DataFrame:
     """A11 full (covariance.py:65-196): per-url maxvar + exponential
     decay alpha from the FFT autocovariance of the bucketed regular
     time grid (the 1D graft of the reference's radial autocovariance;
@@ -164,14 +164,11 @@ def maxvar_full(series: DataFrame, cfg: EngineConfig = DEFAULT,
         return pd.DataFrame(rows, columns=["url", "maxvar", "alpha",
                                            "n_grid", "nzc"])
 
-    nb = n_buckets or cfg.salt_buckets
-    return keyed_apply(series, "url", nb, fn, schema,
-                       detect_hot=False)
+    return keyed_apply(series, "url", fn, schema, detect_hot=False)
 
 
 def orbital_network(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
-                    use_mst: bool = True,
-                    n_buckets: int | None = None) -> DataFrame:
+                    use_mst: bool = True) -> DataFrame:
     """T16 (orbital.py:303-428): joint per-epoch nuisance inversion
     across the key's whole observation network — fit on the MST subset
     (or all valid pairs), subtract the forward model from every pair.
@@ -182,13 +179,12 @@ def orbital_network(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
     from pyrate_spark.operators.udf_kernels import make_orbnet_fn
     schema = ("url string, ts_first timestamp, ts_second timestamp, "
               "delta_corrected double, o_first double, o_second double")
-    nb = n_buckets or cfg.salt_buckets
-    return keyed_apply(pairs, "url", nb, make_orbnet_fn(use_mst),
-                       schema, detect_hot=False)
+    return keyed_apply(pairs, "url", make_orbnet_fn(use_mst), schema,
+                       detect_hot=False)
 
 
-def closure_mask(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
-                 n_buckets: int | None = None) -> DataFrame:
+def closure_mask(pairs: DataFrame,
+                 cfg: EngineConfig = DEFAULT) -> DataFrame:
     """G3-G6 + A8 + P5: enumerate closed loops per key, sum signed
     deltas around each loop, count breaches per observation, and NULL
     the delta of observations whose breach count equals their loop
@@ -200,8 +196,7 @@ def closure_mask(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
     """
     import pandas as pd
     import numpy as np
-    from pyrate_spark.operators.grouped import (_bucketed,
-                                                keyed_apply)
+    from pyrate_spark.operators.grouped import keyed_apply
     from pyrate_spark.kernels.closure import (closed_loops,
                                               discard_loops_containing_max_ifg_count,
                                               sum_closure)
@@ -258,13 +253,11 @@ def closure_mask(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
         return out[["url", "ts_first", "ts_second", "delta_value",
                     "time_span", "nan_fraction", "n_loops", "n_breach"]]
 
-    nb = n_buckets or cfg.salt_buckets
-    return keyed_apply(pairs, "url", nb, fn, schema,
-                       detect_hot=False)
+    return keyed_apply(pairs, "url", fn, schema, detect_hot=False)
 
 
-def closure_fixpoint(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
-                     n_buckets: int | None = None) -> DataFrame:
+def closure_fixpoint(pairs: DataFrame,
+                     cfg: EngineConfig = DEFAULT) -> DataFrame:
     """G6: iterate the closure check until the per-key observation list
     is stable (closure_check.py:56-144 iterative_closure_check). Each
     iteration over the CURRENT edge set: enumerate signed loops up to
@@ -289,8 +282,7 @@ def closure_fixpoint(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
     import pandas as pd
     import numpy as np
     from collections import defaultdict
-    from pyrate_spark.operators.grouped import (_bucketed,
-                                                keyed_apply)
+    from pyrate_spark.operators.grouped import keyed_apply
     from pyrate_spark.kernels.closure import (
         closed_loops, discard_loops_containing_max_ifg_count, sum_closure)
     max_len = cfg.max_loop_length
@@ -366,9 +358,7 @@ def closure_fixpoint(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
         out["n_iter"] = out_iter
         return out[keep_mask]
 
-    nb_ = n_buckets or cfg.salt_buckets
-    return keyed_apply(pairs, "url", nb_, fn, schema,
-                       detect_hot=False)
+    return keyed_apply(pairs, "url", fn, schema, detect_hot=False)
 
 
 def aux_tile_average(series: DataFrame, aux_col: str = "aux",
@@ -428,8 +418,7 @@ def cohort_lowpass(series: DataFrame, cfg: EngineConfig = DEFAULT,
 def cohort_lowpass_fft(series: DataFrame, cfg: EngineConfig = DEFAULT,
                        bucket_seconds: int = 86400,
                        cutoff_days: float = 5.0,
-                       cohort_expr=None, nanfill: bool = True,
-                       n_buckets: int | None = None) -> DataFrame:
+                       cohort_expr=None, nanfill: bool = True) -> DataFrame:
     """T12 true spectral path (aps.py:196-318): the reference low-pass
     filters each epoch's 2-D image in the Fourier domain with a
     Gaussian kernel parameterised by a cutoff distance; the graft runs
@@ -449,8 +438,7 @@ def cohort_lowpass_fft(series: DataFrame, cfg: EngineConfig = DEFAULT,
     one small numpy array."""
     import numpy as np
     import pandas as pd
-    from pyrate_spark.operators.grouped import (_bucketed,
-                                                keyed_apply)
+    from pyrate_spark.operators.grouped import keyed_apply
     from pyrate_spark.kernels.covariance import (gaussian_lowpass_grid,
                                                  series_to_grid)
     if cohort_expr is None:
@@ -490,25 +478,21 @@ def cohort_lowpass_fft(series: DataFrame, cfg: EngineConfig = DEFAULT,
                              "_b": np.concatenate(buckets),
                              "value_lp": np.concatenate(lps)})
 
-    nb = n_buckets or cfg.salt_buckets
-    lp = (_bucketed(g, "_cohort", nb, detect_hot=False)
-          .groupBy("_bucket").applyInPandas(fn, schema))
+    lp = keyed_apply(g, "_cohort", fn, schema, detect_hot=False)
     return (src.join(lp, ["_cohort", "_b"], "left")
             .withColumn("value_hp", F.col("value") - F.col("value_lp"))
             .drop("_cohort", "_b"))
 
 
 def closure_loop_counts(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
-                        loop_length: int = 3,
-                        n_buckets: int | None = None) -> DataFrame:
+                        loop_length: int = 3) -> DataFrame:
     """G3 head-count: number of deduped simple cycles of exactly
     ``loop_length`` per key (collect_loops.py:59-121 + dedupe). For
     loop_length=3 this equals the triangle count of the epoch graph —
     SQL-verifiable by a 3-way self-join."""
     import pandas as pd
     import numpy as np
-    from pyrate_spark.operators.grouped import (_bucketed,
-                                                keyed_apply)
+    from pyrate_spark.operators.grouped import keyed_apply
     from pyrate_spark.kernels.closure import dedupe_loops, find_loops
 
     schema = "url string, n_loops long"
@@ -534,13 +518,11 @@ def closure_loop_counts(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
             rows.append((url, len(dedupe_loops(loops))))
         return pd.DataFrame(rows, columns=["url", "n_loops"])
 
-    nb = n_buckets or cfg.salt_buckets
-    return keyed_apply(pairs, "url", nb, fn, schema,
-                       detect_hot=False)
+    return keyed_apply(pairs, "url", fn, schema, detect_hot=False)
 
 
-def closure_sums(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
-                 n_buckets: int | None = None) -> DataFrame:
+def closure_sums(pairs: DataFrame,
+                 cfg: EngineConfig = DEFAULT) -> DataFrame:
     """A8 as a first-class table: one row per (key, loop) with the
     signed closure sum — the quantity plot_closure.py:28-80 renders
     (closure[:, :, loop] per pixel; here per url). Loop enumeration,
@@ -567,8 +549,7 @@ def closure_sums(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
     residual, which the signed-zero-preserving gate round exposes)."""
     import pandas as pd
     import numpy as np
-    from pyrate_spark.operators.grouped import (_bucketed,
-                                                keyed_apply)
+    from pyrate_spark.operators.grouped import keyed_apply
     from pyrate_spark.kernels.closure import (closed_loops,
                                               discard_loops_containing_max_ifg_count)
     max_len = cfg.max_loop_length
@@ -614,14 +595,11 @@ def closure_sums(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
         return pd.DataFrame(rows, columns=["url", "loop_key", "n_edges",
                                            "loop_weight", "closure"])
 
-    nb = n_buckets or cfg.salt_buckets
-    return keyed_apply(pairs, "url", nb, fn, schema,
-                       detect_hot=False)
+    return keyed_apply(pairs, "url", fn, schema, detect_hot=False)
 
 
 def dem_error_analog(series: DataFrame, cfg: EngineConfig = DEFAULT,
-                     aux_col: str = "aux",
-                     n_buckets: int | None = None) -> DataFrame:
+                     aux_col: str = "aux") -> DataFrame:
     """T14 analog (dem_error.py:169-256): per key, co-estimate a
     nuisance regressor alongside the trend — A = [1, t, aux], solve by
     least squares, report the aux coefficient and emit the corrected
@@ -630,8 +608,7 @@ def dem_error_analog(series: DataFrame, cfg: EngineConfig = DEFAULT,
     valid obs (dem_error.py:200)."""
     import pandas as pd
     import numpy as np
-    from pyrate_spark.operators.grouped import (_bucketed,
-                                                keyed_apply)
+    from pyrate_spark.operators.grouped import keyed_apply
     from pyrate_spark.operators.udf_kernels import group_slices, ts_seconds
 
     schema = ("url string, warc_ts timestamp, value double, "
@@ -662,7 +639,4 @@ def dem_error_analog(series: DataFrame, cfg: EngineConfig = DEFAULT,
         out["aux_coef"] = out_coef
         return out
 
-    nb = n_buckets or cfg.salt_buckets
-    src = series
-    return keyed_apply(src, "url", nb, fn, schema,
-                       detect_hot=False)
+    return keyed_apply(series, "url", fn, schema, detect_hot=False)

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from pyrate_spark.datagen import START_UNIX, YEAR_SECONDS
+from pyrate_spark.operators.grouped import pin_clustering
 
 VALUE_RE = r"v=(-?\d+\.?\d*)"
 
@@ -33,9 +34,13 @@ def extract_series(pages: DataFrame, value_expr=None,
     windows, per-url folds, grouped-map kernels — each of which would
     otherwise shuffle the same rows by url again. Establishing
     hash(url) clustering HERE, once, on the narrow projection lets
-    every such consumer (and the persisted cache the batch pipeline
-    holds) plan zero further exchanges: one exchange of (url, ts,
-    value, lang) replaces ~8 per-stage exchanges on the bench.
+    every such consumer plan zero further exchanges, on this frame or
+    on a persisted copy of it: Spark's planner sees the clustering and
+    drops the consumers' own ``repartition(url)`` / ``repartition(N,
+    url)``. One exchange of (url, ts, value, lang) replaces ~8
+    per-stage exchanges on the bench. It is ``pin_clustering``'s
+    explicit-count form, so AQE never folds it (and the grouped
+    kernels downstream) into one task.
     Streaming frames are never repartitioned (the stateful aggregation
     manages its own partitioning); pass False for a purely columnar
     one-shot consumer that never keys by url."""
@@ -49,7 +54,7 @@ def extract_series(pages: DataFrame, value_expr=None,
         "lang",
     )
     if cluster_by_url and not out.isStreaming:
-        out = out.repartition("url")
+        out = pin_clustering(out)
     return out
 
 

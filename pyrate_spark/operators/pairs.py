@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from pyrate_spark.datagen import YEAR_SECONDS
+from pyrate_spark.operators.grouped import pin_clustering
 
 
 def epoch_ids(series: DataFrame) -> DataFrame:
@@ -90,9 +91,14 @@ def network_pairs(series: DataFrame, max_span_days: int = 90,
     where "next k rows" is ill-defined. Both paths are bit-equal on
     unique-keyed input (pinned by pytest); canonical sources collapse
     duplicates upstream (``_events``: groupBy url, second).
+
+    The one url exchange is ``pin_clustering``'s (none when ``series``
+    is already clustered, e.g. by ``extract_series``), so the grouped
+    kernels that consume the pairs reuse it and AQE never coalesces it.
     """
     if via not in ("window", "range_join"):
         raise ValueError(f"via must be 'window' or 'range_join': {via!r}")
+    series = pin_clustering(series)
     nf = Window.partitionBy("url")
     nan_frac = F.avg(F.when(F.col(value_col).isNull(), 1.0).otherwise(0.0))
     span = F.expr(f"INTERVAL {max_span_days} DAYS")

@@ -38,7 +38,7 @@ def _cluster_by(df: DataFrame, key: str = "url") -> DataFrame:
     because every (url, window) group is within one url — but keying
     it by url makes the TIER'S OWN partitioning reusable: every
     url-keyed consumer (anomaly windows, cascade aggregations, the
-    grouped-map kernels via clustered_by_key, per-url folds) then
+    grouped-map kernels' ``repartition(N, url)``, per-url folds) then
     plans ZERO further exchanges. Measured on the bench: the hourly
     tier feeds 6+ downstream url-keyed stages that each paid a full
     re-shuffle of ~1M rows.
@@ -52,13 +52,12 @@ def _cluster_by(df: DataFrame, key: str = "url") -> DataFrame:
     rollup. Skew bound: one url's rows all land in one partition —
     the same bound every per-url window operator here already lives
     under. Streaming frames pass through untouched (stateful
-    aggregation manages its own partitioning); inputs already
-    clustered by ``key`` (cascade-of-cascade chains) skip the
-    repartition outright."""
+    aggregation manages its own partitioning). On inputs already
+    hash-clustered by ``key`` (cascade-of-cascade chains, a persisted
+    clustered series) Spark's planner drops the repartition itself:
+    ``EnsureRequirements`` removes a user repartition whose child
+    already has the same hash partitioning."""
     if df.isStreaming:
-        return df
-    from pyrate_spark.operators.grouped import clustered_by_key
-    if clustered_by_key(df, key):
         return df
     return df.repartition(key)
 

@@ -9,7 +9,10 @@ numpy + pandas + pyrate_spark.kernels only, which the Arrow worker
 runtime has effectively already loaded.
 
 Each ``make_*`` factory binds config scalars into a closure and returns
-the pandas-DataFrame -> pandas-DataFrame function for applyInPandas.
+a pandas-DataFrame -> pandas-DataFrame function over a frame of many
+keys (``grouped.keyed_apply`` runs it per partition, and per hot key);
+``make_timeseries_rates_arrow_fn`` returns a ``mapInArrow`` body over
+one row per key.
 Determinism: every kernel sorts a key's rows by (ts_first, ts_second)
 — or the single ts — before computing, so results are identical across
 partitionings and cluster sizes (the reference's explicit file-list
@@ -32,7 +35,7 @@ from pyrate_spark.kernels.vcm import get_vcmt
 
 def group_slices(pdf: pd.DataFrame, key: str = "url"):
     """(key, row-index array) per key via one argsort — cheaper than
-    pandas groupby for many keys per bucket. A null key is a key: its
+    pandas groupby for many keys per frame. A null key is a key: its
     rows come first (``None`` does not order against strings)."""
     keys = pdf[key].to_numpy()
     null = pd.isna(keys)
@@ -189,7 +192,7 @@ def _batched_repair(states, pthr):
     def _b0(i):
         # rebuilt per use (~0.06 ms) rather than held across rounds:
         # keeps the driver's memory bound at O(selected-row indices)
-        # per deficient key, independent of the bucket's url count
+        # per deficient key, independent of the frame's url count
         st = states[i]
         spans, ifirst, isecond = st[3], st[4], st[5]
         return design_matrix(np.asarray(ifirst), np.asarray(isecond),
@@ -294,15 +297,15 @@ def _inverted_slices(groups, first_all, second_all, phase_all,
 
 def _inverted_keys(pdf, method, pthr, smorder, smfactor, use_mst,
                    vcm_mode):
-    """Inversion inner loop SHARED by ``make_timeseries_fn``, the
-    fused ``make_timeseries_rates_fn`` and the Arrow list-form
-    ``make_timeseries_rates_arrow_fn`` (one body via
-    ``_inverted_slices``, so the paths cannot drift —
-    tests/test_fused_rates.py additionally pins fused == two-stage
-    bit-equality). Yields (url, dates, spans, tsincr, tscuml) per
-    key. The rank-repair — 65% of the stage at bench shape when run
-    per key — is hoisted into batched rounds (``_batched_repair``)
-    before the per-key solves."""
+    """Pandas-frame form of the inversion inner loop, used by
+    ``make_timeseries_fn``. The fused Arrow list-form
+    ``make_timeseries_rates_arrow_fn`` runs the same body
+    (``_inverted_slices``), so the two cannot drift —
+    tests/test_fused_rates.py pins fused == two-stage bit-equality.
+    Yields (url, dates, spans, tsincr, tscuml) per key. The rank-repair
+    — 65% of the stage at bench shape when run per key — is hoisted
+    into batched rounds (``_batched_repair``) before the per-key
+    solves."""
     first_all, second_all, phase_all, weight_all = _pair_arrays(pdf)
     mv_all = _maxvar_array(pdf)
     groups = list(group_slices(pdf))
@@ -315,7 +318,7 @@ def _inverted_keys(pdf, method, pthr, smorder, smfactor, use_mst,
 def make_timeseries_fn(method: int, pthr: int, smorder: int,
                        smfactor: float, use_mst: bool, vcm_mode: str):
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        # accumulate raw numpy chunks; ONE DataFrame per bucket at the
+        # accumulate raw numpy chunks; ONE output DataFrame at the
         # end (per-key pd.DataFrame + pd.concat was the dominant
         # allocation churn under 32 concurrent workers)
         urls, eids, etss, vels, incrs, cumls = [], [], [], [], [], []
@@ -353,38 +356,11 @@ def make_timeseries_fn(method: int, pthr: int, smorder: int,
     return fn
 
 
-def make_timeseries_rates_fn(method: int, pthr: int, smorder: int,
-                             smfactor: float, use_mst: bool,
-                             vcm_mode: str, err_scale: float):
-    """Fused pairs -> linear rates: the time-series inversion and the
-    cumulative-series regression in ONE grouped-map pass, so the
-    ~50x-larger per-epoch intermediate never crosses the Arrow/shuffle
-    boundary (pipeline fusion of timeseries_per_url +
-    linear_rate_per_url; reference runs them as separate steps,
-    timeseries.py:111-157 then 292-379).
-
-    Bit-exactness contract (tests/test_fused_rates.py): the inversion
-    inner loop IS make_timeseries_fn's (shared ``_inverted_keys``
-    since r5), and the cumulative series is quantized to float32
-    before the regression exactly as the TS_SCHEMA stage boundary
-    would."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        gen = _inverted_keys(pdf, method, pthr, smorder, smfactor,
-                             use_mst, vcm_mode)
-        urls, cols = _rates_columns(gen, err_scale)
-        if urls is None:
-            return pd.DataFrame(columns=["url", "rate", "intercept",
-                                         "rsquared", "error", "samples"])
-        return pd.DataFrame({"url": urls, **cols})
-    return fn
-
-
 def _rates_columns(gen, err_scale):
-    """Fused-rates epilogue shared by the pandas and Arrow forms:
-    consume the inversion generator, run the composition-invariant
-    segment regression (linregress_segments: per-key sums never depend
-    on which other keys share the frame), return (keys, columns)."""
+    """Fused-rates epilogue: consume the inversion generator, run the
+    composition-invariant segment regression (linregress_segments:
+    per-key sums never depend on which other keys share the frame),
+    return (keys, columns)."""
     urls, ys, ts_axes = [], [], []
     for url, dates, _spans, _tsincr, tscuml in gen:
         urls.append(url)
@@ -407,23 +383,29 @@ def make_timeseries_rates_arrow_fn(method: int, pthr: int, smorder: int,
                                    smfactor: float, use_mst: bool,
                                    vcm_mode: str, err_scale: float,
                                    has_weight: bool, has_maxvar: bool):
-    """Fused pairs -> rates over the GROUPED-LIST Arrow layout (r8):
-    the JVM side aggregates each key to ONE row
+    """Fused pairs -> linear rates over the GROUPED-LIST Arrow layout:
+    the time-series inversion and the cumulative-series regression in
+    ONE pass, so the ~50x-larger per-epoch intermediate never crosses
+    the Arrow/shuffle boundary (pipeline fusion of timeseries_per_url +
+    linear_rate_per_url; reference runs them as separate steps,
+    timeseries.py:111-157 then 292-379).
+
+    The JVM side aggregates each key to ONE row
     ``(url, sort_array(collect_list(struct(t1, t2, dv[, w][, mv]))))``
-    — reusing the pair network's url clustering, so no exchange — and
-    this ``mapInArrow`` body unwraps the list column zero-copy (list
+    and this ``mapInArrow`` body unwraps the list column zero-copy (list
     offsets -> per-key slices over the flat struct children, the
     encode_tier pattern). The boundary then carries each url string
     ONCE instead of per pair row (~75x less string traffic at bench
     shape) and no per-row timestamps need datetime conversion.
 
-    Bit-exactness: the JVM ``sort_array`` orders each key's rows by
-    (t1, t2) — (t1, t2) is unique per key by the pair-network
-    contract, so this is exactly the kernel's lexsort order, and
-    ``_prep_key`` re-sorts anyway (a stable no-op here). The inversion
-    body and regression epilogue are the SAME ``_inverted_slices`` /
-    ``_rates_columns`` the pandas form uses; equality is pinned by
-    tests/test_fused_rates.py's arrow-vs-bucketed case."""
+    Bit-exactness contract (tests/test_fused_rates.py, fused ==
+    two-stage): the JVM ``sort_array`` orders each key's rows by
+    (t1, t2) — unique per key by the pair-network contract, so this is
+    exactly the kernel's lexsort order, and ``_prep_key`` re-sorts
+    anyway (a stable no-op here). The inversion body is
+    ``make_timeseries_fn``'s (``_inverted_slices``), and the cumulative
+    series is quantized to float32 before the regression exactly as
+    the TS_SCHEMA stage boundary would (``_rates_columns``)."""
 
     def fn(batches):
         import pyarrow as pa
@@ -463,7 +445,7 @@ def make_timeseries_rates_arrow_fn(method: int, pthr: int, smorder: int,
             if keys is None:
                 continue
             # from_pandas=True: NaN -> SQL NULL, exactly what the
-            # pandas-DataFrame return path has always produced
+            # pandas-DataFrame return path of the other kernels produces
             yield pa.RecordBatch.from_arrays(
                 [urls_arr.take(pa.array(keys, pa.int32())),
                  pa.array(cols["rate"], pa.float64(), from_pandas=True),

@@ -72,18 +72,21 @@ add("Pair network (via='range_join', duplicate-keyed fallback)",
     network_pairs(series, 2, 3, via="range_join"))
 
 add("Per-url inversion (grouped-map kernel)",
-    "salt -> explicit repartition(_bucket) -> ArrowEvalPython/FlatMapGroupsInPandas. "
-    "The repartition is user-specified so AQE cannot coalesce the "
-    "compute-heavy Python stage below the cluster's parallelism.",
+    "repartition(N, url) -> MapInPandas, one frame per url partition. "
+    "The planner drops the repartition on a url-clustered input (here "
+    "the pair window's own exchange); otherwise it is user-specified "
+    "with an explicit N, so AQE cannot coalesce the compute-heavy "
+    "Python stage below the cluster's parallelism.",
     timeseries_per_url(network_pairs(series, 2, 3),
                        EngineConfig(salt_buckets=64), use_mst=False,
                        detect_hot=False))
 
 from pyrate_spark.operators.grouped import linear_rate_from_pairs
 add("Fused pairs -> linear rates (r4 pipeline fusion)",
-    "Both inversion stages in ONE FlatMapGroupsInPandas: the per-epoch "
-    "intermediate (the two-stage chain's largest shuffle) never appears "
-    "in the plan — one salt, one user repartition, one Python stage. "
+    "Both inversion stages in ONE MapInArrow over one row per url "
+    "(sorted list of its pairs): the per-epoch intermediate never "
+    "appears in the plan — at most one user repartition, one Python "
+    "stage. "
     "Bit-exact vs the two-stage chain (tests/test_fused_rates.py).",
     linear_rate_from_pairs(network_pairs(series, 2, 3),
                            EngineConfig(salt_buckets=64), use_mst=False,

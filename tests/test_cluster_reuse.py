@@ -1,24 +1,47 @@
-"""r8 shuffle-free grouped-map path: sound clustering detection and
-composition-invariant kernels.
+"""Shuffle-free grouped-map path: Spark's planner keeps url clustering,
+and the kernels are composition-invariant.
 
-clustered_by_key must say True exactly when the physical partitioning
-guarantees every key's rows share a partition; keyed_apply then runs
-the kernel as MapInPandas with zero new exchanges. Any doubt (renames,
-round-robin repartition, raw reads, a different key) must fall back to
-the explicit salted-bucket exchange.
+``pin_clustering`` is ``repartition(N, key)`` with N the shuffle
+partition count. The planner drops it exactly when the frame's physical
+partitioning already puts every key's rows in one of N partitions, so a
+grouped kernel adds no exchange there; anywhere else (round-robin
+repartition, raw reads, a different key, a rebuilt key column) it stays
+one explicit ``REPARTITION_BY_NUM`` exchange on the key, which AQE does
+not coalesce.
 """
 
 from __future__ import annotations
+
+import re
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from pyrate_spark.config import EngineConfig
 from pyrate_spark.datagen import generate_pages
 from pyrate_spark.operators.extract import extract_series
-from pyrate_spark.operators.grouped import clustered_by_key
+from pyrate_spark.operators.grouped import pin_clustering
 from pyrate_spark.operators.pairs import network_pairs, sequential_pairs
+
+
+def _exchanges(df) -> list[str]:
+    """Distinct Exchange nodes of the physical plan (by plan id: a
+    cached plan's exchanges print once per reference)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sorted({m for m in re.findall(
+        r"Exchange ([^\n]*?)\[plan_id=(\d+)\]", plan)})
+
+
+def _added(df, key: str = "url") -> int:
+    """Exchanges ``pin_clustering(df, key)`` plans beyond df's own."""
+    return len(_exchanges(pin_clustering(df, key))) - len(_exchanges(df))
+
+
+def _pinned_exchange(df, key: str = "url") -> bool:
+    n = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    return any(e.startswith(f"hashpartitioning({key}#") and
+               e.endswith(f", {n}), REPARTITION_BY_NUM, ")
+               for e, _ in _exchanges(pin_clustering(df, key)))
 
 
 @pytest.fixture(scope="module")
@@ -28,19 +51,20 @@ def series(spark):
 
 
 class TestClusteredByKey:
-    def test_false_on_unpersisted_window_output(self, spark, series):
-        # clustered, but NOT persisted: AQE may re-coalesce the
-        # exchange per query (measured 32 -> 1 partitions on a
-        # small-byte pair window), so the shuffle-free path must
-        # decline and keep the explicit coalesce-exempt repartition
+    def test_true_on_unpersisted_window_output(self, spark, series):
+        # the pair network reuses the series' pinned url exchange, an
+        # explicit-count one, so AQE cannot coalesce it under a kernel
         p = network_pairs(series, max_span_days=3, max_pairs_per_epoch=2)
-        assert clustered_by_key(p, "url") is False
+        assert _added(p) == 0
+        assert [e for e, _ in _exchanges(p)] == [
+            e for e, _ in _exchanges(series)]
+        assert _pinned_exchange(p)
 
     def test_true_on_persisted_window_output(self, spark, series):
         p = sequential_pairs(series).persist()
         try:
             p.count()
-            assert clustered_by_key(p, "url") is True
+            assert _added(p) == 0
         finally:
             p.unpersist()
 
@@ -49,37 +73,121 @@ class TestClusteredByKey:
                           max_pairs_per_epoch=2).persist()
         try:
             p.count()
-            assert clustered_by_key(
-                p.select("url", "ts_first", "delta_value"), "url") is True
+            assert _added(p.select("url", "ts_first", "delta_value")) == 0
         finally:
             p.unpersist()
 
     def test_false_after_round_robin_repartition(self, spark, series):
-        p = network_pairs(series, max_span_days=3, max_pairs_per_epoch=2)
-        assert clustered_by_key(p.repartition(5), "url") is False
+        # materialised: directly under the pin, an unpersisted
+        # round-robin repartition is collapsed away by the optimizer
+        p = network_pairs(series, max_span_days=3,
+                          max_pairs_per_epoch=2).repartition(5).persist()
+        try:
+            p.count()
+            assert _added(p) == 1
+            assert _pinned_exchange(p)
+        finally:
+            p.unpersist()
 
     def test_false_after_repartition_by_other_key(self, spark, series):
         p = network_pairs(series, max_span_days=3, max_pairs_per_epoch=2)
-        assert clustered_by_key(p.repartition(5, "ts_first"),
-                                "url") is False
+        p = p.repartition(5, "ts_first").persist()
+        try:
+            p.count()
+            assert _added(p) == 1
+            assert _pinned_exchange(p)
+        finally:
+            p.unpersist()
 
     def test_false_when_key_column_rebuilt(self, spark, series):
         p = network_pairs(series, max_span_days=3, max_pairs_per_epoch=2)
         rebuilt = (p.withColumnRenamed("url", "u")
                    .withColumn("url", F.upper("u")).drop("u"))
-        assert clustered_by_key(rebuilt, "url") is False
+        assert _added(rebuilt) == 1
+        assert _pinned_exchange(rebuilt)
 
-    def test_false_on_raw_source(self, spark, series):
-        assert clustered_by_key(series, "url") is False
+    def test_false_on_raw_source(self, spark):
+        raw = generate_pages(spark, n_urls=20, epochs_per_url=4, seed=17)
+        assert _added(raw) == 1
+        assert _pinned_exchange(raw)
 
     def test_false_for_other_name(self, spark, series):
         p = network_pairs(series, max_span_days=3, max_pairs_per_epoch=2)
-        assert clustered_by_key(p, "ts_first") is False
+        assert _added(p, "ts_first") == 1
+        assert _pinned_exchange(p, "ts_first")
 
-    def test_env_kill_switch(self, spark, series, monkeypatch):
-        p = network_pairs(series, max_span_days=3, max_pairs_per_epoch=2)
-        monkeypatch.setenv("PYRATE_NO_CLUSTER_REUSE", "1")
-        assert clustered_by_key(p, "url") is False
+
+class TestOneKeyedPath:
+    """The grouped kernels' plans over the pipeline ``batch_skewed``
+    runs: persisted series, then the persisted pair network."""
+
+    @pytest.fixture(scope="class")
+    def pairs(self, spark):
+        s = extract_series(generate_pages(
+            spark, n_urls=80, epochs_per_url=12, hot_urls=2, hot_factor=15,
+            null_pct=10, seed=23)).persist()
+        p = network_pairs(s, max_span_days=3,
+                          max_pairs_per_epoch=2).persist()
+        p.count()
+        yield p
+        p.unpersist()
+        s.unpersist()
+
+    @staticmethod
+    def _kernels(pairs):
+        from pyrate_spark.config import EngineConfig
+        from pyrate_spark.operators.grouped import (detect_hot_keys,
+                                                    linear_rate_from_pairs,
+                                                    timeseries_per_url)
+        hot = detect_hot_keys(pairs)
+        assert hot
+        cfg = EngineConfig(ts_method=2, ts_pthr=0)
+        return hot, {
+            "rates": linear_rate_from_pairs(pairs, cfg, use_mst=False,
+                                            hot_keys=hot),
+            "rates_mst": linear_rate_from_pairs(pairs, cfg, use_mst=True,
+                                                hot_keys=hot),
+            "timeseries": timeseries_per_url(pairs, cfg, use_mst=False,
+                                             hot_keys=hot)}
+
+    def test_clustered_input_adds_only_the_hot_range(self, spark, pairs):
+        own = len(_exchanges(pairs))
+        hot, kernels = self._kernels(pairs)
+        for name, out in kernels.items():
+            exs = _exchanges(out)
+            assert len(exs) == own + 1, name
+            ranges = [e for e, _ in exs
+                      if e.startswith("rangepartitioning(url#")]
+            assert len(ranges) == 1, name
+            assert ranges[0].endswith(
+                f", {len(hot)}), REPARTITION_BY_NUM, "), name
+
+    def test_unclustered_input_adds_one_pinned_exchange(self, spark,
+                                                        pairs):
+        scrambled = pairs.repartition(7).persist()
+        try:
+            scrambled.count()
+            n = spark.conf.get("spark.sql.shuffle.partitions")
+
+            def pinned(df):
+                return sum(1 for e, _ in _exchanges(df) if e.startswith(
+                    "hashpartitioning(url#") and e.endswith(
+                    f", {n}), REPARTITION_BY_NUM, "))
+
+            own = len(_exchanges(scrambled))
+            _, kernels = self._kernels(scrambled)
+            for name, out in kernels.items():
+                # the pinned url exchange, plus the hot range spread
+                assert len(_exchanges(out)) == own + 2, name
+                assert pinned(out) == pinned(scrambled) + 1, name
+        finally:
+            scrambled.unpersist()
+
+    def test_no_plan_salts_a_bucket(self, spark, pairs):
+        _, kernels = self._kernels(pairs)
+        for out in kernels.values():
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "_bucket" not in plan
 
 
 class TestSegmentRegressionInvariance:
@@ -111,27 +219,23 @@ class TestSegmentRegressionInvariance:
 
 class TestSeriesClustering:
     def test_extract_series_clusters_batch_frames(self, spark):
-        from pyrate_spark.datagen import generate_pages
-        from pyrate_spark.operators.extract import extract_series
         s = extract_series(generate_pages(spark, n_urls=40,
                                           epochs_per_url=6, seed=3)
                            ).persist()
         try:
             s.count()
-            assert clustered_by_key(s, "url") is True
+            assert _added(s) == 0
             # and the opt-out stays a pure narrow projection
             s2 = extract_series(generate_pages(spark, n_urls=40,
                                                epochs_per_url=6, seed=3),
                                 cluster_by_url=False)
             plan = s2._jdf.queryExecution().executedPlan().toString()
-            assert "REPARTITION_BY_COL" not in plan
+            assert "REPARTITION_BY" not in plan
         finally:
             s.unpersist()
 
     def test_extract_series_never_repartitions_streams(self, spark,
                                                        tmp_path):
-        from pyrate_spark.datagen import generate_pages
-        from pyrate_spark.operators.extract import extract_series
         p = str(tmp_path / "pages")
         generate_pages(spark, n_urls=10, epochs_per_url=4,
                        seed=3).write.parquet(p)

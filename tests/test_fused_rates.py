@@ -53,16 +53,17 @@ def test_fused_never_plans_more_exchanges(spark, pairs):
     two = linear_rate_per_url(timeseries_per_url(pairs, cfg,
                                                  use_mst=False), cfg)
     fused = linear_rate_from_pairs(pairs, cfg, use_mst=False)
-    # r8: BOTH paths now reuse the persisted pair network's url
-    # clustering, so fusion can no longer strictly halve the exchange
-    # count — but it must never plan more, and the fused cold side
-    # ships via the grouped-list Arrow boundary (MapInArrow over a
-    # zero-exchange url aggregation), with at most ONE new exchange
-    # (the tiny hot-key groupBy) on top of the input's own
-    # (exchange_count also sees exchanges INSIDE the cached plan).
+    # BOTH paths reuse the persisted pair network's url clustering, so
+    # fusion can no longer strictly halve the exchange count — but it
+    # must never plan more, and the fused form ships via the
+    # grouped-list Arrow boundary (MapInArrow over a zero-exchange url
+    # aggregation) for cold and hot keys alike, with at most ONE new
+    # exchange (the tiny hot-key range spread) on top of the input's
+    # own (exchange_count also sees exchanges INSIDE the cached plan).
     assert exchange_count(fused) <= exchange_count(two)
     plan = fused._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInArrow") == 1
+    assert plan.count("MapInArrow") == 2
+    assert "FlatMapGroupsInPandas" not in plan
 
     # DISTINCT exchanges (the raw count renders the cached plan's own
     # exchanges once per union branch): the fused hybrid may add only
@@ -81,18 +82,35 @@ def test_fused_never_plans_more_exchanges(spark, pairs):
         distinct_exchanges(pairs)) + 1
 
 
-def test_fused_unclustered_input_keeps_bucketed_path(spark, pairs):
-    """An input whose partitioning does NOT cluster by url (round-robin
-    repartition) must fall back to the salted-bucket exchange — the
-    shuffle-free path would silently split keys across frames."""
-    cfg = EngineConfig(ts_method=2, ts_pthr=0, salt_buckets=16)
-    scrambled = pairs.repartition(7)
-    fused = linear_rate_from_pairs(scrambled, cfg, use_mst=False)
-    plan = fused._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FlatMapGroupsInPandas") == 1
-    # and the results are bit-identical to the clustered path
-    a = _rates_pd(fused)
-    b = _rates_pd(linear_rate_from_pairs(pairs, cfg, use_mst=False))
+def test_fused_unclustered_input_takes_one_explicit_exchange(spark,
+                                                             pairs):
+    """An input whose partitioning does NOT cluster by url (a
+    materialised round-robin repartition) gets exactly one explicit
+    ``repartition(N, url)`` exchange, which AQE does not coalesce —
+    and the results are bit-identical to the clustered input's."""
+    import re
+    cfg = EngineConfig(ts_method=2, ts_pthr=0)
+    scrambled = pairs.repartition(7).persist()
+    try:
+        scrambled.count()
+        fused = linear_rate_from_pairs(scrambled, cfg, use_mst=False)
+        n = spark.conf.get("spark.sql.shuffle.partitions")
+
+        def pinned(df):
+            # distinct by plan id; the cached input's own plan (the
+            # pinned series exchange) prints once per union branch
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            return len(set(re.findall(
+                rf"Exchange hashpartitioning\(url#\d+, {n}\), "
+                r"REPARTITION_BY_NUM, \[plan_id=(\d+)\]", plan)))
+
+        assert pinned(fused) == pinned(scrambled) + 1
+        plan = fused._jdf.queryExecution().executedPlan().toString()
+        assert "_bucket" not in plan
+        a = _rates_pd(fused)
+        b = _rates_pd(linear_rate_from_pairs(pairs, cfg, use_mst=False))
+    finally:
+        scrambled.unpersist()
     assert list(a["url"]) == list(b["url"])
     for c in ("rate", "intercept", "rsquared", "error", "samples"):
         np.testing.assert_array_equal(a[c].to_numpy().view(np.uint64),

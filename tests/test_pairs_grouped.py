@@ -19,12 +19,12 @@ from pyrate_spark.kernels.epochs import SECONDS_PER_YEAR, epochs_from_pairs
 from pyrate_spark.kernels.linalg import linregress
 from pyrate_spark.kernels.stack import stack_rate_pixel
 from pyrate_spark.kernels.timeseries import time_series_pixel
-from pyrate_spark.operators.grouped import (linear_rate_per_url,
+from pyrate_spark.operators.grouped import (keyed_apply,
+                                            linear_rate_per_url,
                                             mask_rate_df, mst_annotate,
                                             stack_rate_per_url,
                                             temporal_highpass_per_url,
-                                            timeseries_per_url,
-                                            salted_buckets)
+                                            timeseries_per_url)
 from pyrate_spark.operators.pairs import (epoch_ids, network_pairs,
                                           sequential_pairs)
 
@@ -240,20 +240,21 @@ class TestTemporalHighpass:
         np.testing.assert_allclose(out["value_lp"].to_numpy(), 7.0)
 
 
-class TestSaltedBuckets:
+class TestHotKeySpread:
     def test_hot_key_isolated(self, spark):
+        """A key above 8x the mean row count runs in a partition of its
+        own; every other key shares the url-clustered partitions."""
         rows = [("hot", float(i)) for i in range(500)] + \
                [(f"u{i}", float(i)) for i in range(50)]
         df = spark.createDataFrame(rows, "url string, v double")
-        out = salted_buckets(df, "url", n_buckets=8, hot_factor=5.0)
-        pdf = out.toPandas()
-        hot_buckets = set(pdf[pdf.url == "hot"]["_bucket"])
-        cold_buckets = set(pdf[pdf.url != "hot"]["_bucket"])
-        assert len(hot_buckets) == 1
-        b = hot_buckets.pop()
-        assert b >= 8                  # dedicated bucket id
-        assert b not in cold_buckets
-        assert max(cold_buckets) < 8
+        out = keyed_apply(df, "url", lambda pdf: pdf, "url string, v double")
+        pdf = (out.withColumn("pid", F.spark_partition_id())
+               .groupBy("url", "pid").count().toPandas())
+        hot_pids = set(pdf[pdf.url == "hot"]["pid"])
+        cold_pids = set(pdf[pdf.url != "hot"]["pid"])
+        assert len(hot_pids) == 1
+        assert not hot_pids & cold_pids
+        assert pdf["count"].sum() == len(rows)
 
 
 def test_pair_lookup_broadcast_join(spark):

@@ -1,6 +1,8 @@
 """Physical-plan assertions: bucketed tables remove shuffles; filters
 and projections reach the parquet scan (pushdown/pruning)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -167,14 +169,17 @@ def test_cohort_lowpass_fft_joinback_broadcasts(spark):
     from pyrate_spark.operators.corrections import cohort_lowpass_fft
     s = extract_series(generate_pages(spark, n_urls=60, epochs_per_url=24,
                                       seed=11))
-    out = cohort_lowpass_fft(s, bucket_seconds=3600, cutoff_days=0.2,
-                             n_buckets=4)
+    out = cohort_lowpass_fft(s, bucket_seconds=3600, cutoff_days=0.2)
     out.count()  # materialize so AQE finalizes the join strategy
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan[:2000]
     assert "SortMergeJoin" not in plan
-    # the applyInPandas stage runs over the explicit _bucket repartition
-    assert "FlatMapGroupsInPandas" in plan
+    # the grouped-map stage runs over the explicit cohort repartition
+    assert "MapInPandas" in plan
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    assert re.search(
+        rf"hashpartitioning\(_cohort#\d+, {n}\), REPARTITION_BY_NUM", plan)
+    assert "_bucket" not in plan
     assert "BatchEvalPython" not in plan  # no row-at-a-time python
 
 
