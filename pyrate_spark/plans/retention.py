@@ -64,10 +64,14 @@ def _rewrite_partition(spark: SparkSession, part_dir: str, tmp_dir: str,
     ``schema`` (r8): per-day schema inference launches its own
     footer-reading Spark job per rewrite; the sweep infers once from
     the first candidate and threads it through — the per-day jobs
-    then submit without an inference round-trip."""
+    then submit without an inference round-trip. ``None`` (a day whose
+    footers differ from the shared schema) merges the day's own file
+    schemas, so no file's column is dropped."""
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
+    else:
+        reader = reader.option("mergeSchema", "true")
     (reader.parquet(part_dir).coalesce(n_out)
      .write.mode("overwrite").parquet(tmp_dir))
 
@@ -147,14 +151,27 @@ def compact_day_store(spark: SparkSession, path: str,
             continue
         candidates.append((day, name, st.getPath(), files))
 
-    shared_schema = None
+    shared_schema, same_schema = None, []
     if candidates:
         # one schema inference for the whole sweep (see
-        # _rewrite_partition): day partitions of one store share it
+        # _rewrite_partition): day partitions of one store share it,
+        # unless the schema drifted. Each day reuses it only if all its
+        # files' footers hold the first candidate's one schema; the
+        # footers of every candidate file come from one parallel
+        # metadata read in the JVM (no data page, no Spark job), in the
+        # order the files are passed.
         shared_schema = spark.read.parquet(
             f"{path}/{candidates[0][1]}").schema
+        footers = jvm.org.apache.parquet.hadoop.ParquetFileReader \
+            .readAllFootersInParallel(
+                conf, [f for c in candidates for f in c[3]], True)
+        schemas = iter([f.getParquetMetadata().getFileMetaData()
+                        .getSchema().toString() for f in footers])
+        per_day = [{next(schemas) for _ in c[3]} for c in candidates]
+        same_schema = [len(per_day[0]) == 1 and d == per_day[0]
+                       for d in per_day]
 
-    def compact_one(cand):
+    def compact_one(cand, same):
         day, name, live_path, files = cand
         snapshot = {f.getPath().getName() for f in files}
         nbytes = sum(f.getLen() for f in files)
@@ -163,7 +180,7 @@ def compact_day_store(spark: SparkSession, path: str,
         tmp_dir = f"{path}/.compact_tmp_{name}"
         old_dir = f"{path}/.compact_old_{name}"
         _rewrite_partition(spark, part_dir, tmp_dir, n_out,
-                           schema=shared_schema)
+                           schema=shared_schema if same else None)
         # A file appended between the read snapshot and the swap would
         # be lost by the rewrite — abort this day rather than drop it.
         now_names = {f.getPath().getName() for f in _data_files(live_path)}
@@ -189,7 +206,8 @@ def compact_day_store(spark: SparkSession, path: str,
         with ThreadPoolExecutor(
                 max_workers=max(1, min(max_concurrency,
                                        len(candidates)))) as pool:
-            for day, result in pool.map(compact_one, candidates):
+            for day, result in pool.map(compact_one, candidates,
+                                        same_schema):
                 if result is None:
                     aborted.append(day)
                 else:

@@ -166,3 +166,42 @@ def test_compact_day_store_crash_leftover_recovery(spark, tmp_path):
     assert spark.read.parquet(path).count() == 8 * 4
     assert not any(p.name.startswith(".compact_")
                    for p in pathlib.Path(path).iterdir())
+
+
+def test_compact_day_store_keeps_a_days_extra_column(spark, tmp_path):
+    """Schema drift: one day's files carry a column the others lack,
+    and another day gains it half-way through its appends. Each day is
+    rewritten with its own files' columns, so the extra column survives
+    compaction and the day without it gains none."""
+    import pathlib
+    from pyrate_spark.plans.retention import compact_day_store
+    path = str(tmp_path / "store")
+    base = dt.datetime(2024, 3, 1)
+    for d in range(3):
+        for k in range(6):
+            extra = d == 1 or (d == 2 and k >= 3)
+            rows = [("u%d" % i, base + dt.timedelta(days=d, hours=k),
+                     float(k * 10 + i)) + (("ok%d" % i,) if extra else ())
+                    for i in range(3)]
+            ddl = "url string, warc_ts timestamp, value double" + (
+                ", status string" if extra else "")
+            write_raw_store(spark.createDataFrame(rows, ddl), path,
+                            mode="append")
+    days = sorted(p for p in pathlib.Path(path).iterdir()
+                  if p.name.startswith("_day="))
+
+    def snapshot():
+        return {p.name: spark.read.option("mergeSchema", "true")
+                .parquet(str(p)).orderBy("url", "warc_ts").toPandas()
+                for p in days}
+
+    before = snapshot()
+    assert [("status" in before[p.name].columns) for p in days] == [
+        False, True, True]
+    res = compact_day_store(spark, path, max_files_per_day=4,
+                            min_age_days=None)
+    assert len(res["compacted"]) == 3
+    after = snapshot()
+    for name, pdf in before.items():
+        assert list(after[name].columns) == list(pdf.columns), name
+        assert after[name].equals(pdf), name
